@@ -34,6 +34,27 @@ from .kernels.paths import can_parse, url_seen_key
 from .kernels.xxh import spark_xxhash64
 from .operators import bloom as bloomf
 from .operators.local_wave import process_wave
+from .operators.politeness import salt_hot_hosts, schedule
+from .operators.seen import anti_join_seen, first_occurrence
+from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed
+from .sources.pages import normalize_pages
+from .sources.state import (
+    BLOOM_STATE_SCHEMA,
+    FRONTIER_SCHEMA,
+    METRICS_SCHEMA,
+    RESULTS_SCHEMA,
+    SEEN_BUCKETS,
+    SEEN_SCHEMA,
+    CrawlState,
+    with_bucket,
+)
+
+# Frontier rows below which the fetch join broadcasts the frontier side.
+# 500k rows × ~150 B/row ≈ 75 MB — sized to stay well inside a default 1 GiB
+# driver/executor headroom rather than Spark's 10 MB auto threshold (the
+# frontier is the *hot* dimension; ADVICE r01 gated this on bytes, not a
+# 2M-row cliff). Bigger waves also get the salted politeness pre-cap.
+BROADCAST_FRONTIER_ROWS = 500_000
 
 
 def seen_filter_module():
@@ -50,20 +71,6 @@ def seen_filter_module():
 
         return mod
     return bloomf
-from .operators.politeness import salt_hot_hosts, schedule
-from .operators.seen import anti_join_seen, first_occurrence
-from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed
-from .sources.pages import normalize_pages
-from .sources.state import (
-    BLOOM_STATE_SCHEMA,
-    FRONTIER_SCHEMA,
-    METRICS_SCHEMA,
-    RESULTS_SCHEMA,
-    SEEN_BUCKETS,
-    SEEN_SCHEMA,
-    CrawlState,
-    with_bucket,
-)
 
 
 @dataclass
@@ -176,7 +183,6 @@ def crawl(
     salt_k: int = 0,
     bloom_prefilter: bool = True,
     bloom_min_seen: int = 200_000,
-    broadcast_frontier_rows: int = 500_000,
     semi_broadcast_rows: int = 250_000,
     direct_broadcast_seen_rows: int = 500_000,
     compact_every: int = 8,
@@ -191,10 +197,15 @@ def crawl(
     budget/delay (reference Q2 semantics, batch-shaped). None = no deferral
     (the reference never defers; parity runs use None).
 
+    The fetch join broadcasts frontiers of ≤ ``BROADCAST_FRONTIER_ROWS``
+    rows; bigger ones take the sort-merge join, host-salted when
+    ``salt_k`` > 0.
+
     Seen anti-join strategy (VERDICT r01 #1 — never shuffle the seen table):
 
-    * Bloom active (seen ≥ bloom_min_seen): the post-Bloom "maybe" rows are
-      checked with a *bucket-pruned broadcast semi-join*: seen is read only
+    * Bloom active (``bloom_prefilter`` and seen ≥ bloom_min_seen): the
+      post-Bloom "maybe" rows are checked with a *bucket-pruned broadcast
+      semi-join*: seen is read only
       for the buckets present in maybe (Hive-partition pruning on the
       seen layout), the tiny maybe key-set is broadcast, and the matching
       seen keys (≤ |maybe|) are broadcast back for the anti-join — one
@@ -204,12 +215,6 @@ def crawl(
     * Bloom inactive (small seen): seen ≤ ``direct_broadcast_seen_rows``
       is broadcast directly into the anti-join; only a small-seen ×
       huge-wave corner pays a shuffle.
-
-    broadcast_frontier_rows: frontier rows below which the fetch join
-    broadcasts the frontier side. 500k rows × ~150 B/row ≈ 75 MB — sized to
-    stay well inside a default 1 GiB driver/executor headroom rather than
-    Spark's 10 MB auto threshold (the frontier is the *hot* dimension;
-    ADVICE r01 gated this on bytes, not a 2M-row cliff).
 
     compact_every: seen deltas are merged into one bucket-partitioned
     snapshot every this many iterations, bounding the per-read dir count.
@@ -254,27 +259,32 @@ def crawl(
             quotas[run_id] = max(1, politeness_budget_ms // cfg.delay_ms)
         else:
             quotas[run_id] = None
+    no_quotas = all(q is None for q in quotas.values())
 
-    if resume and state.load_manifest():
-        start_iter = state.manifest["iteration"] + 1
+    resumed = resume and state.load_manifest()
+    if resumed and state.manifest["done"]:
+        return CrawlReport(state, runs, state.manifest["iteration"])
+    # robots rules are static after init; recompute from the corpus (cheap,
+    # deterministic) rather than serializing them into the manifest
+    robots_by_run = _collect_robots(spark, pages_n, runs)
+    if resumed:
+        iteration = state.manifest["iteration"]
         rank_offsets = dict(state.manifest["rank_offsets"])
         seq_offsets = dict(state.manifest["seq_offsets"])
-        if state.manifest["done"]:
-            return CrawlReport(state, runs, state.manifest["iteration"])
-        frontier_rows_known = None  # unknown → count once below
+        frontier_rows = state.frontier(iteration).count()
+        seen_total = state.seen(upto=iteration).count()
         boot_frontier, boot_seen = None, None
     else:
         rank_offsets, seq_offsets, boot_frontier, boot_seen = _bootstrap(
-            spark, state, pages_n, runs
+            state, runs, robots_by_run, bloomf
         )
-        frontier_rows_known = len(boot_frontier)
-        start_iter = 1
+        iteration = 0
+        frontier_rows = len(boot_frontier)
+        seen_total = len(boot_seen)
 
     cfgs = {r: cfg for r, (seed, cfg) in runs.items()}
     seeds_map = {r: seed for r, (seed, cfg) in runs.items()}
-    # robots rules are static after init; recompute from the corpus (cheap,
-    # deterministic) rather than serializing them into the manifest
-    robots_rules = {r: v[0] for r, v in _collect_robots(spark, pages_n, runs).items()}
+    robots_rules = {r: v[0] for r, v in robots_by_run.items()}
     extract_fn = build_extract_candidates(cfgs, seeds_map, robots_rules)
 
     # low edge of the current frontier's rank span per run (exact when no
@@ -282,12 +292,6 @@ def crawl(
     # the index-pass bucket range, never changes results)
     rank_lo = {run: 0 for run in runs}
     carry_frontier = None
-    iteration = start_iter - 1
-    frontier_rows = (
-        frontier_rows_known
-        if frontier_rows_known is not None
-        else state.frontier(iteration).count()
-    )
 
     # adaptive partition sizing: AQE cannot coalesce user repartitions or
     # post-checkpoint writes, so the driver sizes them from the wave counts
@@ -299,9 +303,6 @@ def crawl(
     def parts_for(rows: int) -> int:
         return max(1, min(max_parts, int(rows // rows_per_task) + 1))
 
-    import os as _os
-
-    debug_timing = _os.environ.get("CRAWLEY_DEBUG_TIMING") == "1"
     # localCheckpoint blocks are non-reliable: an executor lost between
     # iterations (cluster mode / dynamic allocation) would lose them with a
     # truncated lineage — carry the in-memory frontier plan only where that
@@ -313,24 +314,16 @@ def crawl(
     # Bloom shards (north_rule): definitely-new candidates skip the exact
     # anti-join. Invariant when the prefilter is ACTIVE: blooms cover every
     # seen delta ≤ bloom_upto and bloom_upto == previous iteration. Shards
-    # are built LAZILY: below bloom_min_seen no per-iteration shard job
-    # runs at all (the exact anti-join alone is cheaper); at activation a
+    # are built and read LAZILY: below bloom_min_seen no per-iteration shard
+    # job runs and the shard table is never read (the exact anti-join alone
+    # is cheaper); at activation the committed shards are loaded once and a
     # one-off catch-up folds the uncovered seen deltas (retained on disk
-    # regardless of compaction) into the shards, and from then on each
-    # iteration appends its wave's shard delta before the manifest commit —
-    # so the invariant also survives resume at any point.
-    bloom_merged: dict = {}
+    # regardless of compaction) into them, and from then on each iteration
+    # appends its wave's shard delta before the manifest commit — so the
+    # invariant also survives resume at any point.
+    bloom_merged: dict | None = None  # loaded at activation
     bloom_bc = None
-    seen_total = 0
-    bloom_upto = -1
-    if bloom_prefilter:
-        shard_rows = [
-            (r["bucket"], bytes(r["bitmap"]))
-            for r in state._read_upto("blooms", BLOOM_STATE_SCHEMA, iteration).collect()
-        ]
-        bloom_merged = bloomf.merge_bitmaps(shard_rows)
-        seen_total = state.seen(upto=iteration).count()
-        bloom_upto = state.manifest.get("bloom_upto", iteration if resume else 0)
+    bloom_upto = state.manifest.get("bloom_upto", iteration)
 
     # Pipelined finalize (per-iteration floor): the previous iteration's
     # table writes / lineage collect / compaction / bloom-shard job stay in
@@ -343,7 +336,7 @@ def crawl(
     # idempotent overwrites). Pipelining engages only where the in-memory
     # carry is safe at all (static local mode, no quotas — same condition
     # as carry_frontier); clusters keep the strict write→commit→read cycle.
-    pipelined = can_carry and all(q is None for q in quotas.values())
+    pipelined = can_carry and no_quotas
     pending: dict | None = None
     carry_seen_delta = None
     carry_seen_rows = 0
@@ -357,76 +350,88 @@ def crawl(
     # driver_seen_cap, and never exists on resume (rebuild would cost the
     # Spark job the path is meant to avoid). Deferral and frontier_cap keep
     # the pure-Spark loop — their semantics live in the Spark operators.
-    hybrid_ok = (
-        driver_wave_rows > 0
-        and frontier_cap is None
-        and all(q is None for q in quotas.values())
-    )
+    hybrid_ok = driver_wave_rows > 0 and frontier_cap is None and no_quotas
     driver_seen: set | None = boot_seen if hybrid_ok else None
     driver_frontier: list | None = boot_frontier if hybrid_ok else None
     driver_seen_n = len(driver_seen) if driver_seen is not None else 0
     driver_seen_futs: list = []
     driver_frontier_fut = None
 
-    def _drain_pending() -> int:
-        """Join the pending iteration's futures, write its metrics, commit
-        its manifest. Returns its deferred count (always 0 when pipelined)."""
-        nonlocal pending, bloom_merged, bloom_bc, bloom_upto, avg_links, carry_seen_delta
+    def _fold_shards(it: int, rows) -> None:
+        """Persist iteration ``it``'s new seen-filter shards, OR them into
+        the driver copy, and drop the stale broadcast (rebuilt on next use)."""
+        nonlocal bloom_merged, bloom_bc, bloom_upto
+        shards = [(r["bucket"], bytes(r["bitmap"])) for r in rows]
+        state.write_local_binary("blooms", it, shards)
+        bloom_merged = bloomf.merge_bitmaps(
+            [(b, bm.tobytes()) for b, bm in bloom_merged.items()] + shards
+        )
+        bloom_upto = it
+        if bloom_bc is not None:
+            bloom_bc.destroy()
+            bloom_bc = None
+
+    def _finish(it, frontier_in, lineage, cand_rows, metric_rows, rank_offs,
+                seq_offs, done, deferred_n=0, seen_compact=None) -> None:
+        """The one iteration-finish step of both wave kinds: write the
+        iteration's metric rows, refresh the link fan-out estimate, commit
+        the manifest."""
+        nonlocal avg_links
+        cand_n = sum(row[3] for row in lineage)
+        state.write_local(
+            "metrics",
+            it,
+            lineage
+            + [(it, "frontier_in", "", frontier_in)]
+            + metric_rows
+            + [(it, "candidates", "", cand_n), (it, "deferred", "", deferred_n)],
+            METRICS_SCHEMA,
+        )
+        if frontier_in > 0 and cand_rows > 0:
+            # estimate for the index pass sizes the POST-combine stream
+            avg_links = max(1.0, cand_rows / frontier_in)
+        state.commit(
+            it, rank_offs, seq_offs, done=done,
+            seen_compact=seen_compact, bloom_upto=bloom_upto,
+        )
+
+    def _drain_pending() -> None:
+        """Join the pending Spark iteration's futures and finish it."""
+        nonlocal pending, carry_seen_delta
         if pending is None:
-            return 0
+            return
         p, pending = pending, None
         carry_seen_delta = None
         for f in p["write_futs"]:
             f.result()
         lineage_rows = p["lineage_fut"].result()
-        deferred_n = p["deferred_fut"].result() if p["deferred_fut"] is not None else 0
         new_compact = p["compact_fut"].result() if p["compact_fut"] is not None else None
         if p["bloom_fut"] is not None:
-            new_shards = [
-                (r["bucket"], bytes(r["bitmap"])) for r in p["bloom_fut"].result()
-            ]
-            state.write_local_binary("blooms", p["iteration"], new_shards)
-            bloom_merged = bloomf.merge_bitmaps(
-                [(b, bm.tobytes()) for b, bm in bloom_merged.items()] + new_shards
-            )
-            bloom_upto = p["iteration"]
-            if bloom_bc is not None:
-                bloom_bc.destroy()
-                bloom_bc = None
-        lineage = [
-            (p["iteration"], "lineage_partition_candidates", str(r["src_pid"]), r["count"])
-            for r in lineage_rows
-        ]
-        cand_n = sum(c for _, _, _, c in lineage)
-        cand_rows = sum(r["rows"] for r in lineage_rows)
-        metric_rows = (
-            lineage
-            + p["metric_rows"]
-            + [
-                (p["iteration"], "candidates", "", cand_n),
-                (p["iteration"], "deferred", "", deferred_n),
-            ]
-        )
-        state.write_local("metrics", p["iteration"], metric_rows, METRICS_SCHEMA)
-        if p["frontier_rows"] > 0 and cand_rows > 0:
-            # estimate for the index pass sizes the POST-combine stream
-            avg_links = max(1.0, cand_rows / p["frontier_rows"])
-        state.commit(
+            _fold_shards(p["iteration"], p["bloom_fut"].result())
+        _finish(
             p["iteration"],
+            p["frontier_rows"],
+            [
+                (p["iteration"], "lineage_partition_candidates", str(r["src_pid"]), r["count"])
+                for r in lineage_rows
+            ],
+            sum(r["rows"] for r in lineage_rows),
+            p["metric_rows"],
             p["rank_offsets"],
             p["seq_offsets"],
-            done=p["done"],
+            p["done"],
+            deferred_n=p["deferred_n"],
             seen_compact=new_compact,
-            bloom_upto=bloom_upto if bloom_prefilter else None,
         )
         p["candidates"].unpersist()
-        return deferred_n
 
     try:
         while frontier_rows > 0 and iteration < max_iterations:
             if driver_frontier is None and driver_frontier_fut is not None:
                 driver_frontier = driver_frontier_fut.result() if driver_seen is not None else None
                 driver_frontier_fut = None
+            iteration += 1
+            t0 = time.monotonic()
             if (
                 driver_seen is not None
                 and driver_frontier is not None
@@ -436,8 +441,6 @@ def crawl(
                 # one Spark job total: the pushed-down url IN (...) page
                 # fetch; extraction/dedup/ordering run in-process against the
                 # exact driver seen set, state lands via pyarrow writes.
-                iteration += 1
-                t0 = time.monotonic()
                 _drain_pending()  # manifest commits must stay ordered
                 for f in driver_seen_futs:
                     driver_seen.update(f.result())
@@ -471,42 +474,28 @@ def crawl(
                 state.write_local("frontier", iteration, out["frontier"], FRONTIER_SCHEMA)
                 state.write_local("seen", iteration, out["seen"], SEEN_SCHEMA)
                 seen_total += out["wave_rows"]
-                if frontier_rows > 0 and out["cand_rows"] > 0:
-                    avg_links = max(1.0, out["cand_rows"] / frontier_rows)
-                state.write_local(
-                    "metrics",
+                _finish(
                     iteration,
+                    frontier_rows,
+                    [(iteration, "lineage_partition_candidates", "-1", out["cand_total"])],
+                    out["cand_rows"],
                     [
-                        (iteration, "lineage_partition_candidates", "-1", out["cand_total"]),
-                        (iteration, "candidates", "", out["cand_total"]),
-                        (iteration, "deferred", "", 0),
-                        (iteration, "frontier_in", "", frontier_rows),
                         (iteration, "emitted", "", out["emit_n"]),
                         (iteration, "enqueued", "", out["enq_n"]),
                         (iteration, "dropped_overflow", "", 0),
                         (iteration, "driver_path", "", 1),
                         (iteration, "wall_ms", "", int((time.monotonic() - t0) * 1000)),
                     ],
-                    METRICS_SCHEMA,
-                )
-                state.commit(
-                    iteration, rank_offsets, seq_offsets, done=out["enq_n"] == 0
+                    rank_offsets,
+                    seq_offsets,
+                    done=out["enq_n"] == 0,
                 )
                 rank_lo = prev_rank_hi
-                frontier_rows_in = frontier_rows
                 driver_frontier = out["frontier"]
                 frontier_rows = out["enq_n"]
                 carry_frontier = None
-                if debug_timing:
-                    print(
-                        f"[iter {iteration}] frontier_in={frontier_rows_in}"
-                        f" driver_path total={time.monotonic() - t0:.2f}s",
-                        flush=True,
-                    )
                 continue
             driver_frontier = None  # consumed: the Spark path re-collects a small tail
-            iteration += 1
-            t0 = time.monotonic()
             # reuse the in-memory (checkpoint-backed) next-frontier plan instead
             # of a parquet round-trip; deferral chains old-frontier lineage, so
             # fall back to the committed snapshot whenever rows were deferred
@@ -521,7 +510,7 @@ def crawl(
             now, deferred = schedule(
                 frontier,
                 quotas,
-                salt_buckets=64 if frontier_rows > broadcast_frontier_rows else None,
+                salt_buckets=64 if frontier_rows > BROADCAST_FRONTIER_ROWS else None,
             )
 
             # 2. fetch join (F1) — canParse-gated rows only reach the corpus scan.
@@ -532,7 +521,7 @@ def crawl(
             # sort-merge path against the bucketed corpus, salted against
             # hot-host skew.
             fetchable = now.filter(F.col("can_fetch"))
-            if frontier_rows <= broadcast_frontier_rows:
+            if frontier_rows <= BROADCAST_FRONTIER_ROWS:
                 fetched = F.broadcast(fetchable).join(pages_n, on="url", how="inner")
             else:
                 if salt_k:
@@ -551,10 +540,9 @@ def crawl(
 
             # 4. dedup (D2 in-wave, D1 vs seen): in-wave first occurrence, then
             # Bloom prefilter — definitely-new rows skip the exact anti-join.
-            # The prefilter engages only past bloom_min_seen; shards are built
-            # lazily (a one-off catch-up from the retained seen deltas at
-            # activation), so below the threshold no per-iteration shard job
-            # runs at all.
+            # The prefilter engages only past bloom_min_seen; the Bloom hash
+            # columns exist only from then on (below it they would ride the
+            # index-pass checkpoint unused).
             # ADVICE r02 (medium): the pending iteration's seen delta rides along
             # in memory and is broadcast into the anti-join below; its row count
             # is known exactly (it was that wave's index-pass count). Above the
@@ -564,35 +552,34 @@ def crawl(
             if carry_seen_delta is not None and carry_seen_rows > semi_broadcast_rows:
                 _drain_pending()
             bloom_active = bloom_prefilter and seen_total >= bloom_min_seen
-            firsts = first_occurrence(candidates)
+            firsts = with_bucket(first_occurrence(candidates))
             flags = ["emit_ok", "enqueue_ok"]
             offs = {"emit_ok": seq_offsets, "enqueue_ok": rank_offsets}
             keys = ["run_id", "url_key"]
             maybe_rows, seen_buckets_read, seen_rows_scanned = 0, None, -1
-            if bloom_prefilter:
-                firsts = bloomf.with_bloom_hashes(with_bucket(firsts))
-            if bloom_active and bloom_upto < (
-                iteration - 2 if pending is not None else iteration - 1
-            ):
-                # lazy activation catch-up: drain any pending iteration so every
-                # seen delta is durable, then fold the uncovered deltas into the
-                # shards in one job; from here on each iteration's shard delta
-                # keeps coverage current (one behind when pipelined — the gap is
-                # exactly the carried delta, handled below)
-                _drain_pending()
-                catch = bloomf.with_bloom_hashes(
-                    state.seen_between(bloom_upto, iteration - 1)
-                )
-                rows = bloomf.build_shards(catch).collect()
-                new_shards = [(r["bucket"], bytes(r["bitmap"])) for r in rows]
-                state.write_local_binary("blooms", iteration - 1, new_shards)
-                bloom_merged = bloomf.merge_bitmaps(
-                    [(b, bm.tobytes()) for b, bm in bloom_merged.items()] + new_shards
-                )
-                if bloom_bc is not None:
-                    bloom_bc.destroy()
-                    bloom_bc = None
-                bloom_upto = iteration - 1
+            if bloom_active:
+                firsts = bloomf.with_bloom_hashes(firsts)
+                if bloom_merged is None:  # first active wave: load the shards
+                    shards = state._read_upto("blooms", BLOOM_STATE_SCHEMA, bloom_upto)
+                    bloom_merged = bloomf.merge_bitmaps(
+                        [(b, bytes(bm)) for b, bm in shards.collect()]
+                    )
+                # only a pending iteration whose own shard job is in flight
+                # may stay uncovered; one that ran before activation never
+                # gets shards of its own
+                in_flight = pending is not None and pending["bloom_fut"] is not None
+                if bloom_upto < (iteration - 2 if in_flight else iteration - 1):
+                    # lazy activation catch-up: drain any pending iteration so
+                    # every seen delta is durable, then fold the uncovered
+                    # deltas into the shards in one job; from here on each
+                    # iteration's shard delta keeps coverage current (one
+                    # behind when pipelined — the gap is exactly the carried
+                    # delta, handled below)
+                    _drain_pending()
+                    catch = bloomf.with_bloom_hashes(
+                        state.seen_between(bloom_upto, iteration - 1)
+                    )
+                    _fold_shards(iteration - 1, bloomf.build_shards(catch).collect())
             # durable parquet coverage: ≤ iteration-2 while an iteration is
             # pending (its delta rides along in memory), else ≤ iteration-1
             seen_upto = iteration - 2 if pending is not None else iteration - 1
@@ -628,7 +615,7 @@ def crawl(
                     # metric must not re-resolve dirs against the post-drain
                     # manifest, whose compact pointer may differ and whose
                     # superseded snapshot dirs get deleted (ADVICE r02)
-                    if _os.environ.get("CRAWLEY_SEEN_METRICS") == "1":
+                    if os.environ.get("CRAWLEY_SEEN_METRICS") == "1":
                         seen_rows_scanned = state.count_parquet_rows(
                             state.seen_dirs(seen_upto, seen_buckets_read)
                         )
@@ -676,7 +663,6 @@ def crawl(
                 num_buckets=max(64, 4 * parts_for(est_cands)),
             )
             prev_rank_hi = dict(rank_offsets)
-            t_index = time.monotonic() - t0
             emit_counts = idx_counts["emit_ok"]
             enq_counts = idx_counts["enqueue_ok"]
             # Q3 opt-in: keep the first frontier_cap fresh enqueues per run
@@ -716,14 +702,9 @@ def crawl(
             next_frontier = fresh_frontier.unionByName(
                 deferred.select("run_id", "rank", "url", "host", "can_fetch")
             ).coalesce(parts_for(enq_n))
-            if bloom_prefilter:
-                seen_df = indexed.select(
-                    "run_id", "url_key", F.col("uri").alias("url"), "bucket"
-                ).coalesce(parts_for(emit_n + enq_n))
-            else:
-                seen_df = with_bucket(
-                    indexed.select("run_id", "url_key", F.col("uri").alias("url"))
-                ).coalesce(parts_for(emit_n + enq_n))
+            seen_df = indexed.select(
+                "run_id", "url_key", F.col("uri").alias("url"), "bucket"
+            ).coalesce(parts_for(emit_n + enq_n))
 
             # 7+8. drain the PREVIOUS iteration's futures (they had a whole
             # index pass to finish in the background — normally a no-wait join),
@@ -734,9 +715,7 @@ def crawl(
             # merge into one bucket-partitioned snapshot (covers ≤ iteration-1:
             # durable after the drain above) — amortized O(seen/K) per
             # iteration, and the read path stays O(K) dirs.
-            t_drain0 = time.monotonic()
             _drain_pending()
-            t_drain = time.monotonic() - t_drain0
             last_compact = state.manifest.get("seen_compact", -1)
             do_compact = iteration - 1 - max(last_compact, 0) >= compact_every
             write_futs = [
@@ -752,55 +731,48 @@ def crawl(
                 .agg(F.sum("dup_count").alias("count"), F.count("*").alias("rows"))
                 .collect()
             )
-            deferred_fut = (
-                None
-                if all(q is None for q in quotas.values())
-                else pool.submit(deferred.count)
-            )
             bloom_fut = (
                 pool.submit(lambda: bloomf.build_shards(indexed).collect())
                 if bloom_active
                 else None
             )
+            # quotas imply sync mode: the deferred count is resolved before
+            # the commit so the committed done flag is exact
+            deferred_n = 0 if no_quotas else deferred.count()
             seen_total += wave_rows
-            enq_total = sum(enq_counts.values())
-            metric_rows = [
-                (iteration, "frontier_in", "", frontier_rows),
-                (iteration, "bloom_false_positives", "", sum(idx_counts.get("_maybe_seen", {}).values())),
-                (iteration, "bloom_maybe", "", maybe_rows),
-                (iteration, "seen_rows_scanned", "", seen_rows_scanned),
-                (
-                    iteration,
-                    "seen_buckets_read",
-                    ",".join(map(str, seen_buckets_read)) if seen_buckets_read is not None else "all",
-                    len(seen_buckets_read) if seen_buckets_read is not None else SEEN_BUCKETS,
-                ),
-                (iteration, "emitted", "", sum(emit_counts.values())),
-                (iteration, "enqueued", "", enq_total),
-                (iteration, "dropped_overflow", "", dropped_overflow),
-                (iteration, "wall_ms", "", int((time.monotonic() - t0) * 1000)),
-            ]
             pending = {
                 "iteration": iteration,
                 "write_futs": write_futs,
                 "compact_fut": compact_fut,
                 "lineage_fut": lineage_fut,
-                "deferred_fut": deferred_fut,
                 "bloom_fut": bloom_fut,
-                "metric_rows": metric_rows,
+                "metric_rows": [
+                    (iteration, "bloom_false_positives", "", sum(idx_counts.get("_maybe_seen", {}).values())),
+                    (iteration, "bloom_maybe", "", maybe_rows),
+                    (iteration, "seen_rows_scanned", "", seen_rows_scanned),
+                    (
+                        iteration,
+                        "seen_buckets_read",
+                        ",".join(map(str, seen_buckets_read)) if seen_buckets_read is not None else "all",
+                        len(seen_buckets_read) if seen_buckets_read is not None else SEEN_BUCKETS,
+                    ),
+                    (iteration, "emitted", "", emit_n),
+                    (iteration, "enqueued", "", enq_n),
+                    (iteration, "dropped_overflow", "", dropped_overflow),
+                    (iteration, "wall_ms", "", int((time.monotonic() - t0) * 1000)),
+                ],
                 "frontier_rows": frontier_rows,
+                "deferred_n": deferred_n,
                 "rank_offsets": dict(rank_offsets),
                 "seq_offsets": dict(seq_offsets),
                 "candidates": candidates,
-                "done": False,  # patched below once the next frontier size is known
+                "done": enq_n + deferred_n == 0,
             }
+            frontier_rows = enq_n + deferred_n
             if pipelined:
-                deferred_n = 0
+                carry_seen_delta = seen_df
+                carry_seen_rows = wave_rows
             else:
-                # sync mode: resolve the deferred count first so the committed
-                # done flag is exact, then drain (commits this iteration)
-                deferred_n = deferred_fut.result() if deferred_fut is not None else 0
-                pending["done"] = (enq_n + deferred_n) == 0
                 _drain_pending()
             # next frontier's rank span: fresh enqueues start at the old high
             # water; carried-over deferred rows keep their old (lower) ranks.
@@ -812,16 +784,8 @@ def crawl(
             if deferred_n == 0:
                 rank_lo = prev_rank_hi
             carry_frontier = (
-                next_frontier
-                if deferred_n == 0 and all(q is None for q in quotas.values()) and can_carry
-                else None
+                next_frontier if deferred_n == 0 and no_quotas and can_carry else None
             )
-            frontier_rows_in = frontier_rows
-            frontier_rows = enq_n + deferred_n
-            if pending is not None:
-                pending["done"] = frontier_rows == 0
-                carry_seen_delta = seen_df
-                carry_seen_rows = wave_rows
             if driver_seen is not None:
                 # hybrid merge-back: fold this Spark wave's keys into the
                 # driver seen set (async — seen_df re-reads checkpoint
@@ -845,13 +809,6 @@ def crawl(
                         driver_frontier_fut = pool.submit(
                             lambda df=next_frontier: [tuple(r) for r in df.collect()]
                         )
-            if debug_timing:
-                print(
-                    f"[iter {iteration}] frontier_in={frontier_rows_in}"
-                    f" index_pass={t_index:.2f}s drain={t_drain:.2f}s"
-                    f" total={time.monotonic() - t0:.2f}s",
-                    flush=True,
-                )
 
         _drain_pending()
     finally:
@@ -867,7 +824,7 @@ def crawl(
             p, pending = pending, None
             if p is not None:
                 futs = list(p["write_futs"]) + [
-                    p["compact_fut"], p["lineage_fut"], p["deferred_fut"], p["bloom_fut"]
+                    p["compact_fut"], p["lineage_fut"], p["bloom_fut"]
                 ]
                 for f in futs:
                     if f is not None:
@@ -879,13 +836,13 @@ def crawl(
     return CrawlReport(state, runs, iteration)
 
 
-def _bootstrap(spark, state: CrawlState, pages_n, runs):
+def _bootstrap(state: CrawlState, runs, robots_by_run, seen_filter):
     """Iteration 0, driver-side (tiny, O(#runs + robots rules)): pre-seed the
-    seen set with the raw seed strings (crawler.go:97-98), fetch + parse
-    robots, process the robots link/sitemap injections through the canonical
-    candidate pipeline (crawler.go:246-263), and lay down frontier₀."""
-    robots_by_run = _collect_robots(spark, pages_n, runs)
-
+    seen set with the raw seed strings (crawler.go:97-98), process the
+    robots link/sitemap injections (``robots_by_run``, from
+    _collect_robots) through the canonical candidate pipeline
+    (crawler.go:246-263), lay down frontier₀, and seed the ``seen_filter``
+    module's (Bloom or cuckoo) shards."""
     results_rows, seen_rows, frontier_rows = [], [], []
     rank_offsets, seq_offsets = {}, {}
     for run_id, (seed, cfg) in runs.items():
@@ -926,10 +883,8 @@ def _bootstrap(spark, state: CrawlState, pages_n, runs):
         SEEN_SCHEMA,
     )
     state.write_local("frontier", 0, frontier_rows, FRONTIER_SCHEMA)
-    build_shards_local = seen_filter_module().build_shards_local
-
     state.write_local_binary(
-        "blooms", 0, build_shards_local([(r, k) for r, k, _ in seen_rows])
+        "blooms", 0, seen_filter.build_shards_local([(r, k) for r, k, _ in seen_rows])
     )
     state.write_local(
         "metrics", 0, [(0, "bootstrap_frontier", "", len(frontier_rows))], METRICS_SCHEMA

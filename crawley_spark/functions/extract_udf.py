@@ -46,8 +46,6 @@ Two scale-critical optimizations live here (both exact, not approximate):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import types as T
 
 CANDIDATES_SCHEMA = T.StructType(
@@ -81,9 +79,12 @@ def _arrow_schema():
 
 # Bound the per-partition combine dict; when exceeded the partition flushes
 # early (partial combine — the downstream window keeps exactness). Sized so
-# a 128 MB corpus partition's unique links fit comfortably.
-_COMBINE_FLUSH = int(os.environ.get("CRAWLEY_COMBINE_FLUSH", "2000000"))
-_MEMO_MAX = int(os.environ.get("CRAWLEY_CLASSIFY_MEMO_MAX", "1000000"))
+# a 128 MB corpus partition's unique links fit comfortably. The memo bound
+# clears the classification memo wholesale (it is a pure cache). Both are
+# module globals looked up per call, so a test can patch them to 1 to force
+# every flush and eviction branch.
+_COMBINE_FLUSH = 2_000_000
+_MEMO_MAX = 1_000_000
 
 
 def build_extract_candidates(cfgs: dict, seeds: dict, robots: dict):

@@ -11,6 +11,7 @@ path membership (robots.go:66-76), not prefix match.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 MODE_ALLOW_ALL = "allow_all"
@@ -18,6 +19,8 @@ MODE_GOT_RULES = "got_rules"
 MODE_DENY_ALL = "deny_all"
 
 ROBOTS_PATH = "/robots.txt"
+
+_DECIMAL = re.compile(r"\d+(\.\d+)?", re.ASCII)
 
 
 @dataclass
@@ -128,9 +131,10 @@ def crawl_delay_ms(ua: str, body: str):
     (``v == '*' or v in ua``, parser.go:85), extended with the
     'crawl-delay'/'crawldelay' key. The LAST directive in an applicable
     group wins (deterministic under the same last-writer convention the
-    reference applies to repeated groups); values are non-negative
-    decimal seconds, ``floor(x * 1000 + 0.5)`` milliseconds (one IEEE
-    parse + one multiply — engine-identical); directives before any UA
+    reference applies to repeated groups); values are plain decimal
+    seconds (ASCII digits, optionally '.' and more digits),
+    ``floor(x * 1000 + 0.5)`` milliseconds (one IEEE parse + one
+    multiply — engine-identical); directives before any UA
     line or in non-matching groups are ignored."""
     import math
 
@@ -151,10 +155,12 @@ def crawl_delay_ms(ua: str, body: str):
         if key in ("useragent", "user-agent"):
             active = val == "*" or val in ua
         elif key in ("crawl-delay", "crawldelay") and active:
-            try:
-                x = float(val)
-            except ValueError:
+            # plain decimal seconds only: float() would also take exponent
+            # ("1e3"), digit-group ("1_5"), sign, inf/nan and non-ASCII
+            # digit forms, none of which a robots.txt convention allows
+            if not _DECIMAL.fullmatch(val):
                 continue
-            if x >= 0 and math.isfinite(x):
+            x = float(val)
+            if math.isfinite(x):  # a 400-digit value overflows to inf
                 out = int(math.floor(x * 1000 + 0.5))
     return out
