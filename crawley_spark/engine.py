@@ -22,6 +22,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -212,9 +213,17 @@ def crawl(
       column-pruned scan of the touched shards, zero shuffle of seen. If
       maybe exceeds ``semi_broadcast_rows`` (transitional huge waves), it
       falls back to a shuffle anti-join against the pruned buckets.
-    * Bloom inactive (small seen): seen ≤ ``direct_broadcast_seen_rows``
-      is broadcast directly into the anti-join; only a small-seen ×
-      huge-wave corner pays a shuffle.
+    * Bloom inactive, driver seen set engaged (see driver_seen_cap): the
+      wave is anti-joined against a broadcast of the driver's exact keys,
+      built from one Arrow table — no seen parquet is read.
+    * Bloom inactive otherwise (small seen): seen ≤
+      ``direct_broadcast_seen_rows`` is broadcast directly into the
+      anti-join; only a small-seen × huge-wave corner pays a shuffle.
+
+    Each Spark wave records the branch it took as one ``seen_check``
+    metric row, keyed ``driver_keys``, ``direct_broadcast``, ``shuffle``,
+    ``bloom_semi`` or ``bloom_shuffle``, valued with the size that chose it
+    (driver keys, seen rows, or Bloom "maybe" rows).
 
     compact_every: seen deltas are merged into one bucket-partitioned
     snapshot every this many iterations, bounding the per-read dir count.
@@ -241,11 +250,14 @@ def crawl(
     extract/dedup/order dataflow in plain Python over a driver-resident
     seen set. Engages only while that set is exact and ≤ ``driver_seen_cap``
     keys: fresh crawls start with it (bootstrap is driver-side already),
-    each Spark wave's keys merge back asynchronously while small, and the
-    first wave overflowing the cap disables it permanently (pure Spark from
-    then on). Deferral (politeness quotas), ``frontier_cap``, and resume
-    runs keep the pure-Spark loop. ``driver_wave_rows=0`` disables the
-    hybrid entirely (tests pinning the distributed machinery do this).
+    and the first wave overflowing the cap disables it permanently (pure
+    Spark from then on). Until then a Spark wave does its small state I/O
+    on the driver too: one Arrow collect of the indexed wave feeds its
+    results/frontier/seen tables (pyarrow writes), the driver seen set and
+    the next driver frontier, and its seen compaction runs in pyarrow.
+    Deferral (politeness quotas), ``frontier_cap``, and resume runs keep
+    the pure-Spark loop. ``driver_wave_rows=0`` disables the hybrid
+    entirely (tests pinning the distributed machinery do this).
     """
     bloomf = seen_filter_module()  # Bloom (default) or cuckoo seen-prefilter
     runs = _normalize_runs(seeds, config)
@@ -326,7 +338,7 @@ def crawl(
     bloom_upto = state.manifest.get("bloom_upto", iteration)
 
     # Pipelined finalize (per-iteration floor): the previous iteration's
-    # table writes / lineage collect / compaction / bloom-shard job stay in
+    # Spark table writes / lineage collect / compaction / bloom-shard job stay in
     # flight while this iteration's (driver-bound) plan+index pass runs;
     # they are drained — and the manifest committed — one iteration later.
     # Correctness never depends on those writes: the next iteration's seen
@@ -353,9 +365,6 @@ def crawl(
     hybrid_ok = driver_wave_rows > 0 and frontier_cap is None and no_quotas
     driver_seen: set | None = boot_seen if hybrid_ok else None
     driver_frontier: list | None = boot_frontier if hybrid_ok else None
-    driver_seen_n = len(driver_seen) if driver_seen is not None else 0
-    driver_seen_futs: list = []
-    driver_frontier_fut = None
 
     def _fold_shards(it: int, rows) -> None:
         """Persist iteration ``it``'s new seen-filter shards, OR them into
@@ -427,9 +436,6 @@ def crawl(
 
     try:
         while frontier_rows > 0 and iteration < max_iterations:
-            if driver_frontier is None and driver_frontier_fut is not None:
-                driver_frontier = driver_frontier_fut.result() if driver_seen is not None else None
-                driver_frontier_fut = None
             iteration += 1
             t0 = time.monotonic()
             if (
@@ -442,9 +448,6 @@ def crawl(
                 # fetch; extraction/dedup/ordering run in-process against the
                 # exact driver seen set, state lands via pyarrow writes.
                 _drain_pending()  # manifest commits must stay ordered
-                for f in driver_seen_futs:
-                    driver_seen.update(f.result())
-                driver_seen_futs = []
                 urls = sorted({r[2] for r in driver_frontier if r[4]})
                 by_url: dict = {}
                 if urls:
@@ -464,8 +467,7 @@ def crawl(
                     rank_offsets, cfgs, seeds_map, robots_rules, SEEN_BUCKETS,
                 )
                 seq_offsets, rank_offsets = out["seq_offsets"], out["rank_offsets"]
-                driver_seen_n = len(driver_seen)
-                if driver_seen_n > driver_seen_cap:
+                if len(driver_seen) > driver_seen_cap:
                     # a small frontier can still fan out past the cap; the set
                     # was exact through this wave (state already durable), so
                     # hand off to pure Spark permanently
@@ -634,8 +636,21 @@ def crawl(
                         )
                     else:
                         new_cands = fresh.unionByName(anti_join_seen(maybe, seen_side))
+                seen_check = (
+                    "bloom_semi" if maybe_rows <= semi_broadcast_rows else "bloom_shuffle",
+                    maybe_rows,
+                )
                 flags = flags + ["_maybe_seen"]  # free per-run counts via the index pass
                 offs = dict(offs, _maybe_seen={})
+            elif driver_seen is not None:
+                # the driver's exact key set IS the seen table (it already
+                # holds the pending wave's keys): no parquet read at all
+                run_ids, url_keys = zip(*driver_seen)
+                seen_side = spark.createDataFrame(
+                    pa.table({"run_id": run_ids, "url_key": url_keys})
+                )
+                new_cands = firsts.join(F.broadcast(seen_side), on=keys, how="left_anti")
+                seen_check = ("driver_keys", len(driver_seen))
             else:
                 seen_side = state.seen(upto=seen_upto).select(*keys)
                 if carry_seen_delta is not None:
@@ -644,8 +659,10 @@ def crawl(
                     new_cands = firsts.join(
                         F.broadcast(seen_side), on=keys, how="left_anti"
                     )
+                    seen_check = ("direct_broadcast", seen_total)
                 else:
                     new_cands = anti_join_seen(firsts, seen_side)
+                    seen_check = ("shuffle", seen_total)
 
             # 5+6. one canonical-order pass assigns BOTH the emission seq and the
             # next-frontier rank (dense per flag); the localCheckpoint inside
@@ -708,23 +725,60 @@ def crawl(
 
             # 7+8. drain the PREVIOUS iteration's futures (they had a whole
             # index pass to finish in the background — normally a no-wait join),
-            # then submit this iteration's independent actions: three table
-            # writes + lineage collect (+ compaction / bloom shards). The wave
-            # is already materialized by the index pass, so these only re-read
-            # checkpoint blocks. Every compact_every iterations the seen deltas
-            # merge into one bucket-partitioned snapshot (covers ≤ iteration-1:
+            # then write this iteration's three tables and submit its
+            # independent actions: lineage collect (+ compaction / bloom
+            # shards). The wave is already materialized by the index pass, so
+            # these only re-read checkpoint blocks. While the driver holds the
+            # exact seen set and this wave fits under driver_seen_cap, one
+            # Arrow collect of the wave feeds the tables (pyarrow writes, as a
+            # driver wave's), the driver seen set and the next driver
+            # frontier; a wave that overflows the cap hands off to pure Spark
+            # for good, and from then on the tables are background Spark
+            # writes. Every compact_every iterations the seen deltas merge
+            # into one bucket-partitioned snapshot (covers ≤ iteration-1:
             # durable after the drain above) — amortized O(seen/K) per
-            # iteration, and the read path stays O(K) dirs.
+            # iteration, and the read path stays O(K) dirs; a driver-sized
+            # seen table is folded with pyarrow.
+            if driver_seen is not None and len(driver_seen) + wave_rows > driver_seen_cap:
+                driver_seen = None
             _drain_pending()
             last_compact = state.manifest.get("seen_compact", -1)
             do_compact = iteration - 1 - max(last_compact, 0) >= compact_every
-            write_futs = [
-                pool.submit(state.write, "results", iteration, results_df),
-                pool.submit(state.write, "frontier", iteration, next_frontier),
-                pool.submit(state.write_seen, iteration, seen_df),
-            ]
+            write_futs = []
+            if driver_seen is not None:
+                wave = indexed.select(
+                    "run_id", "url_key", "uri", "bucket", "host", "can_fetch",
+                    "emit_ok", "idx_emit_ok", "enqueue_ok", "idx_enqueue_ok",
+                ).toArrow().to_pydict()
+                run_ids, uris = wave["run_id"], wave["uri"]
+                seen_rows = list(zip(run_ids, wave["url_key"], uris, wave["bucket"]))
+                results_rows = sorted(
+                    (run, seq, uri, iteration)
+                    for run, seq, uri, ok in zip(run_ids, wave["idx_emit_ok"], uris, wave["emit_ok"])
+                    if ok
+                )
+                driver_frontier = sorted(
+                    (run, rank, uri, host, can_fetch)
+                    for run, rank, uri, host, can_fetch, ok in zip(
+                        run_ids, wave["idx_enqueue_ok"], uris, wave["host"],
+                        wave["can_fetch"], wave["enqueue_ok"],
+                    )
+                    if ok
+                )
+                state.write_local("results", iteration, results_rows, RESULTS_SCHEMA)
+                state.write_local("frontier", iteration, driver_frontier, FRONTIER_SCHEMA)
+                state.write_local("seen", iteration, seen_rows, SEEN_SCHEMA)
+                driver_seen.update((run, key) for run, key, _, _ in seen_rows)
+            else:
+                write_futs = [
+                    pool.submit(state.write, "results", iteration, results_df),
+                    pool.submit(state.write, "frontier", iteration, next_frontier),
+                    pool.submit(state.write_seen, iteration, seen_df),
+                ]
             compact_fut = (
-                pool.submit(state.compact_seen, iteration - 1) if do_compact else None
+                pool.submit(state.compact_seen, iteration - 1, local=driver_seen is not None)
+                if do_compact
+                else None
             )
             lineage_fut = pool.submit(
                 lambda: candidates.groupBy("src_pid")
@@ -750,6 +804,8 @@ def crawl(
                     (iteration, "bloom_false_positives", "", sum(idx_counts.get("_maybe_seen", {}).values())),
                     (iteration, "bloom_maybe", "", maybe_rows),
                     (iteration, "seen_rows_scanned", "", seen_rows_scanned),
+                    # the seen check's shape, valued with the size that chose it
+                    (iteration, "seen_check", *seen_check),
                     (
                         iteration,
                         "seen_buckets_read",
@@ -786,29 +842,6 @@ def crawl(
             carry_frontier = (
                 next_frontier if deferred_n == 0 and no_quotas and can_carry else None
             )
-            if driver_seen is not None:
-                # hybrid merge-back: fold this Spark wave's keys into the
-                # driver seen set (async — seen_df re-reads checkpoint
-                # blocks) while it stays under the cap; overflowing waves
-                # disable the driver path for the rest of the crawl
-                if driver_seen_n + wave_rows > driver_seen_cap:
-                    driver_seen = None
-                    driver_seen_futs = []
-                    driver_frontier_fut = None
-                else:
-                    driver_seen_n += wave_rows
-                    driver_seen_futs.append(
-                        pool.submit(
-                            lambda df=seen_df: {
-                                (r[0], r[1])
-                                for r in df.select("run_id", "url_key").collect()
-                            }
-                        )
-                    )
-                    if 0 < frontier_rows <= driver_wave_rows and deferred_n == 0:
-                        driver_frontier_fut = pool.submit(
-                            lambda df=next_frontier: [tuple(r) for r in df.collect()]
-                        )
 
         _drain_pending()
     finally:

@@ -22,12 +22,12 @@ pure-Spark ≡ interpreter on results, seen, frontier and offsets).
 
 Scale gate (engine.crawl): engages only while the driver holds the exact
 seen set — fresh crawls start with it (bootstrap is driver-side already);
-each Spark wave's keys are merged back asynchronously while small; the
-first wave past ``driver_seen_cap`` invalidates it permanently and the
-crawl is pure-Spark from then on. A 100-TB crawl therefore uses it for
-exactly the iterations where the cluster would otherwise idle behind the
-driver, and never holds more than ``driver_seen_cap`` keys in driver
-memory.
+each Spark wave's keys are merged back from the wave's one Arrow collect
+while small; the first wave past ``driver_seen_cap`` invalidates it
+permanently and the crawl is pure-Spark from then on. A 100-TB crawl
+therefore uses it for exactly the iterations where the cluster would
+otherwise idle behind the driver, and never holds more than
+``driver_seen_cap`` keys in driver memory.
 """
 
 from __future__ import annotations

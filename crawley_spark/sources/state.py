@@ -41,6 +41,7 @@ Iceberg would expire them).
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
@@ -126,6 +127,14 @@ BLOOM_STATE_SCHEMA = T.StructType(
         T.StructField("bitmap", T.BinaryType()),
     ]
 )
+
+
+def _arrow_schema(schema: T.StructType):
+    """The pyarrow schema of one of the flat state schemas above."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "long": pa.int64(), "integer": pa.int32(), "boolean": pa.bool_()}
+    return pa.schema([(f.name, types[f.dataType.typeName()]) for f in schema.fields])
 
 
 def with_bucket(df: DataFrame, col: str = "url_key") -> DataFrame:
@@ -375,17 +384,24 @@ class CrawlState:
                     total += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
         return total
 
-    def compact_seen(self, upto: int) -> int:
+    def compact_seen(self, upto: int, local: bool = False) -> int:
         """Merge the current compact snapshot + deltas ≤ upto into one
         bucket-partitioned snapshot, sorted by url_key within buckets (tight
         parquet row-group min/max for point-lookup pruning). Returns ``upto``;
         the caller must pass it to :meth:`commit` to make it live. Under an
         Iceberg catalog this is a no-op: the seen table is bucket-partitioned
-        at write time and pruning is metadata-driven."""
+        at write time and pruning is metadata-driven.
+
+        ``local``: the seen table is driver-sized (the engine's hybrid gate
+        holds it as an exact driver set), so fold it with pyarrow on the
+        driver instead of a Spark job — same ``pb=B`` layout, same order."""
         if self.catalog:
             return upto
-        src = self.seen(upto=upto)
         dst = os.path.join(self.root, "seen_compact", f"upto={upto}")
+        if local:
+            self._compact_seen_local(upto, dst)
+            return upto
+        src = self.seen(upto=upto)
         (
             src.withColumn("pb", F.col("bucket"))
             .repartition(F.col("pb"))
@@ -396,30 +412,51 @@ class CrawlState:
         )
         return upto
 
+    def _compact_seen_local(self, upto: int, dst: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = _arrow_schema(SEEN_SCHEMA)
+        parts = [
+            pq.read_table(os.path.join(d, f), columns=schema.names).cast(schema)
+            for d in self.seen_dirs(upto)
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+        t = pa.concat_tables(parts) if parts else schema.empty_table()
+        t = t.sort_by([("bucket", "ascending"), ("url_key", "ascending")])
+        shutil.rmtree(dst, ignore_errors=True)
+        os.makedirs(dst)
+        buckets = t.column("bucket").to_pylist()
+        lo = 0
+        while lo < len(buckets):
+            hi = bisect.bisect_right(buckets, buckets[lo], lo)
+            leaf = os.path.join(dst, f"pb={buckets[lo]}")
+            os.makedirs(leaf)
+            pq.write_table(t.slice(lo, hi - lo), os.path.join(leaf, "part-00000.parquet"))
+            lo = hi
+        open(os.path.join(dst, "_SUCCESS"), "w").close()
+
     def write_local(self, table: str, iteration: int, rows: list, schema: T.StructType) -> None:
         """Driver-local rows → parquet via pyarrow directly (no Spark job —
         a local createDataFrame costs one Python-worker round-trip per
         default-parallelism partition, ~4s/write at local[32]). Used for the
-        tiny driver-side tables: metrics and the iteration-0 bootstrap."""
+        driver-side tables: metrics, the iteration-0 bootstrap and every
+        wave's state while the driver holds the exact seen set."""
         if self.catalog:
             self._iceberg_write(
                 table, iteration, self.spark.createDataFrame(rows, schema).coalesce(1)
             )
             return
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        _PA = {"string": pa.string(), "long": pa.int64(), "integer": pa.int32(), "boolean": pa.bool_()}
-        pa_schema = pa.schema([(f.name, _PA[f.dataType.typeName()]) for f in schema.fields])
+        pa_schema = _arrow_schema(schema)
         cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
-        table_arr = pa.table(
-            {f.name: pa.array(list(c), type=_PA[f.dataType.typeName()]) for f, c in zip(schema.fields, cols)}
+        self._write_arrow(
+            table,
+            iteration,
+            pa.table([pa.array(list(c), type=f.type) for f, c in zip(pa_schema, cols)], schema=pa_schema),
         )
-        d = self._dir(table, iteration)
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(table_arr, os.path.join(d, "part-00000.parquet"))
-        with open(os.path.join(d, "_SUCCESS"), "w"):
-            pass
 
     def write_local_binary(self, table: str, iteration: int, shards: list) -> None:
         """[(bucket:int, bitmap:bytes)] → parquet (Bloom shard deltas)."""
@@ -433,7 +470,6 @@ class CrawlState:
             )
             return
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         t = pa.table(
             {
@@ -441,11 +477,19 @@ class CrawlState:
                 "bitmap": pa.array([m for _, m in shards], type=pa.binary()),
             }
         )
+        self._write_arrow(table, iteration, t)
+
+    def _write_arrow(self, table: str, iteration: int, t) -> None:
+        """Replace ``table``'s iteration dir with one parquet file, as
+        Spark's ``mode("overwrite")`` does: part files of an earlier write
+        to the same dir must not survive into later reads."""
+        import pyarrow.parquet as pq
+
         d = self._dir(table, iteration)
-        os.makedirs(d, exist_ok=True)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
         pq.write_table(t, os.path.join(d, "part-00000.parquet"))
-        with open(os.path.join(d, "_SUCCESS"), "w"):
-            pass
+        open(os.path.join(d, "_SUCCESS"), "w").close()
 
     def _read_upto(self, table: str, schema: T.StructType, upto: int) -> DataFrame:
         if self.catalog:

@@ -185,3 +185,22 @@ def test_resume_reads_driver_written_state(spark, tmp_path):
     assert resumed.result_urls("run0") == want.results
     got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
     assert got_seen == want.seen
+
+
+def test_fresh_hybrid_crawl_replaces_spark_written_state(spark, tmp_path):
+    """A fresh hybrid crawl into a checkpoint dir that a pure-Spark crawl
+    used before: the driver-side pyarrow writes replace each iteration dir
+    as Spark's overwrite does, so no part file of the earlier crawl
+    survives into the results or the seen set."""
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    ck = str(tmp_path / "ck")
+    df = pages_to_df(spark, pages)
+    spark_crawl(spark, df, "http://h0.example", cfg, checkpoint_dir=ck, driver_wave_rows=0)
+    report = spark_crawl(spark, df, "http://h0.example", cfg, checkpoint_dir=ck)
+    assert _driver_iters(report), "the second crawl should run driver waves"
+    assert report.result_urls("run0") == want.results
+    seen_rows = report.seen("run0").collect()
+    assert len(seen_rows) == len(want.seen)
+    assert {r["url_key"]: r["url"] for r in seen_rows} == want.seen

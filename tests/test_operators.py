@@ -3387,6 +3387,7 @@ def test_script_profile(spark):
         (10, "שלום עולם", "hebrew"),
         (11, "สวัสดีชาวโลก", "thai"),
         (12, "这是中文文本测试", "han"),
+        (13, "×÷× αβ", "greek"),  # Latin-1 math signs are not letters
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t, _ in fixtures], "doc_id long, text string"
@@ -4160,6 +4161,37 @@ def test_jpeg_arith_progressive_decode():
     )
 
 
+def test_jpeg_arith_restart_fill_bytes():
+    """Any marker may be preceded by 0xFF fill bytes (T.81 B.1.1.2): the
+    arithmetic decoders' restart seek steps over them, so sequential and
+    progressive streams with ``FF FF`` before every RSTn decode to the same
+    luma as the same streams without."""
+    import re
+
+    import numpy as np
+
+    from crawley_spark.operators.multimodal import jpeg_decode_luma
+
+    def with_fill(data):
+        sos = data.find(b"\xff\xda")
+        tail, n = re.subn(rb"\xff[\xd0-\xd7]", lambda m: b"\xff\xff" + m[0], data[sos:])
+        assert n > 0
+        return data[:sos] + tail
+
+    rng = np.random.default_rng(410)
+    y = rng.integers(0, 256, size=(8, 40))  # 5 MCUs
+    seq = _jpeg_encode_arith([y], [(1, 1)], restart=2)
+    assert jpeg_decode_luma(with_fill(seq)) == jpeg_decode_luma(seq)
+    gray = [
+        {"comps": [0], "ss": 0, "se": 0, "ah": 0, "al": 1},
+        {"comps": [0], "ss": 0, "se": 0, "ah": 1, "al": 0},
+        {"comps": [0], "ss": 1, "se": 63, "ah": 0, "al": 1},
+        {"comps": [0], "ss": 1, "se": 63, "ah": 1, "al": 0},
+    ]
+    prog = _jpeg_encode_arith_progressive([y], [(1, 1)], gray, restart=2)
+    assert jpeg_decode_luma(with_fill(prog)) == jpeg_decode_luma(prog)
+
+
 def test_host_url_stats(spark):
     """URL-diversity trap signals: a session-id host (distinct hex paths
     surviving digit-collapse) flags; a pagination host collapses to few
@@ -4242,14 +4274,14 @@ def test_duplication_by_source(spark):
 
 def test_lang_id_confidence(spark):
     """Margin semantics: unambiguous German text is confident; an exact
-    en/fr one-marker tie has margin 0 and is NOT confident (the doc the
+    en/fr/es one-marker tie has margin 0 and is NOT confident (the doc the
     alphabetical tie-break decides arbitrarily); empty/markerless text is
     'und' with zero scores; pred_lang always agrees with lang_id."""
     from crawley_spark.operators.textstats import lang_id, lang_id_confidence
 
     rows = [
         (0, "das ist der text und die sache nicht wahr der und"),
-        (1, "x the y le z"),          # 1-1 en/fr tie
+        (1, "x the y le z"),          # 1-1-1 en/fr/es tie
         (2, ""),                       # und
         (3, "zzz qqq www"),           # no markers -> und
         (4, "the the the and of le"),  # en 5? vs fr 1 -> confident
